@@ -364,7 +364,17 @@ def ivf_assign(
     every IVF consumer). Scores and tie-breaks are the exact same
     expressions (round(cos, 6); max cos, then min centroid id), so
     every downstream oracle is bit-stable — asserted by the
-    assignment-parity test."""
+    assignment-parity test.
+
+    Precondition: `id_col` is unique in `vectors`. The assignment is
+    per input ROW, so duplicate ids give one output row each (possibly
+    in different cells), not one row per id.
+
+    NaN cosines (a NaN component in the vector or the centroid; a
+    zero-norm side scores 0.0, not NaN) follow Spark's NaN ordering:
+    NaN ranks ABOVE every finite cosine and NaN ties NaN, so a NaN
+    score wins the cell, and among several NaN scores the lowest
+    centroid id wins."""
     c_row = centroids.select(
         F.col(id_col).alias("centroid_id"),
         F.col(vec_col).alias("c_vec"),

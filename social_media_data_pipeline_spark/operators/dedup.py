@@ -564,16 +564,19 @@ def incremental_dedup(
 # OWN signatures, joins them against the store, and appends its
 # survivors. The lifecycle below manages that store:
 #   append  — survivors only (flagged duplicates excluded HERE, not by
-#             caller convention), layout-stamped, bucketed for pruning
-#   read    — partition-pruned to the buckets a probe batch touches
+#             caller convention), params/schema-stamped, one plain
+#             parquet write per append
+#   read    — with a probe batch, a broadcast left-semi join on
+#             (band_idx, band_hash): only store rows the probe can hit
 #   compact — drop bands of docs later deduped/retired + coalesce the
-#             per-append small files (staged rewrite, swap documented)
-# Layout: parquet partitioned by (band_idx, band_bucket) where
-# band_bucket = crc32(band_hash) % buckets. A probe batch touches at
-# most its own distinct (band_idx, band_bucket) pairs — bounded by
-# bands × buckets — so the store read prunes to those directories: an
-# ingest batch far smaller than the corpus reads a correspondingly
-# small slice of the store instead of all of it.
+#             per-append files into one (staged rewrite, swap documented)
+# Layout: FLAT — plain parquet files directly under the store directory,
+# no partition directories. Hive partitioning by (band_idx, crc32 bucket)
+# pruned almost nothing: a 100-doc batch touches ~79% of 64 buckets per
+# band (1 - (63/64)^100) and a 625-doc one all of them, while the 256
+# directories cost a file-listing job per read, an OR-chain of up to 256
+# partition predicates to plan, and ~200 tiny files per append. The
+# semi join filters the same rows without any of that.
 
 _BAND_STORE_META = "_band_store_meta.json"
 
@@ -584,18 +587,26 @@ def _band_store_params_path(store_path: str) -> str:
     return os.path.join(store_path, _BAND_STORE_META)
 
 
+def _band_store_files(store_path: str) -> list[str]:
+    import glob
+    import os
+
+    return glob.glob(os.path.join(store_path, "**", "*.parquet"), recursive=True)
+
+
 def band_store_append(
     bands: DataFrame,
     store_path: str,
     flagged: DataFrame | None = None,
-    buckets: int = 64,
     params: dict | None = None,
 ) -> None:
     """Append a batch's band table (`sketches.minhash_band_table`
     output: doc, band_idx, band_hash) to the persisted store, EXCLUDING
     docs listed in `flagged` (the duplicates `incremental_dedup` just
     found — appending them would make the store grow with junk and
-    every future batch pay collision candidates against it).
+    every future batch pay collision candidates against it). The rows
+    are written as plain parquet into the store directory: at most one
+    file per input partition, no partition directories.
 
     `params` (num_hashes/bands/shingle_k) is stamped into a meta file on
     first append and verified on every later append/read: joining bands
@@ -620,13 +631,10 @@ def band_store_append(
             "doc",
             "left_anti",
         )
-    out = bands.withColumn(
-        "band_bucket", F.pmod(F.crc32(F.col("band_hash")), F.lit(buckets))
-    )
     schema_ddl = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in out.schema.fields
+        f"{f.name} {f.dataType.simpleString()}" for f in bands.schema.fields
     )
-    meta = {"buckets": buckets, **(params or {}), "schema": schema_ddl}
+    meta = {**(params or {}), "schema": schema_ddl}
     mp = _band_store_params_path(store_path)
     if os.path.exists(mp):
         have = json.load(open(mp))
@@ -651,10 +659,8 @@ def band_store_append(
         os.makedirs(store_path, exist_ok=True)
         with open(mp, "w") as f:
             json.dump(meta, f)
-    if not out.isEmpty():
-        out.write.mode("append").partitionBy(
-            "band_idx", "band_bucket"
-        ).parquet(store_path)
+    if not bands.isEmpty():
+        bands.write.mode("append").parquet(store_path)
 
 
 def band_store_read(
@@ -664,30 +670,29 @@ def band_store_read(
     params: dict | None = None,
 ) -> DataFrame:
     """Read the store back as (doc, band_idx, band_hash). With
-    `probe_bands` (the NEW batch's band table) the read is pruned to
-    the (band_idx, band_bucket) partitions the probe can possibly hit —
-    the collected probe-bucket set is bounded by bands × buckets, never
-    by data size. `params` re-verifies the signature stamp.
+    `probe_bands` (the NEW batch's band table) the read is a broadcast
+    left-semi join on (band_idx, band_hash): only store rows the probe
+    can join survive, with no driver round trip. The probe side is one
+    batch's bands, so it is broadcast. `params` re-verifies the
+    signature stamp.
 
     The read takes its schema from the meta stamp, never from parquet
     footer inference: a store holding only the stamp (zero-row appends,
     a crash before the first data write) resolves to an EMPTY frame
     instead of UNABLE_TO_INFER_SCHEMA. Parquet data WITHOUT a stamp is
-    refused — silently assuming default params would mis-prune buckets.
+    refused — silently assuming default params would match nothing.
     """
-    import glob
     import json
     import os
 
     mp = _band_store_params_path(store_path)
     if not os.path.exists(mp):
-        if glob.glob(os.path.join(store_path, "**", "*.parquet"),
-                     recursive=True):
+        if _band_store_files(store_path):
             raise ValueError(
                 f"band_store_read: {store_path} has parquet data but no "
                 f"{_BAND_STORE_META} stamp — refusing to guess signature "
-                "params (wrong bucket pruning); restore the stamp or "
-                "rebuild the store"
+                "params (bands built with other params never match); "
+                "restore the stamp or rebuild the store"
             )
         old = store_path.rstrip("/") + ".old"
         hint = (
@@ -712,25 +717,11 @@ def band_store_read(
         reader = reader.schema(meta["schema"])
     df = reader.parquet(store_path)
     if probe_bands is not None:
-        buckets = int(meta.get("buckets", 64))
-        touched = [
-            (int(r["band_idx"]), int(r["__b"]))
-            for r in probe_bands.select(
-                "band_idx",
-                F.pmod(F.crc32(F.col("band_hash")), F.lit(buckets)).alias("__b"),
-            )
-            .distinct()
-            .collect()
-        ]
-        if not touched:
-            return df.limit(0).select("doc", "band_idx", "band_hash")
-        cond = F.lit(False)
-        for bi, bb in sorted(set(touched)):
-            cond = cond | (
-                (F.col("band_idx") == F.lit(bi))
-                & (F.col("band_bucket") == F.lit(bb))
-            )
-        df = df.filter(cond)
+        df = df.join(
+            F.broadcast(probe_bands.select("band_idx", "band_hash")),
+            ["band_idx", "band_hash"],
+            "left_semi",
+        )
     return df.select("doc", "band_idx", "band_hash")
 
 
@@ -738,12 +729,13 @@ def band_store_compact(
     spark: "SparkSession",
     store_path: str,
     drop_docs: DataFrame | None = None,
-    files_per_partition: int = 1,
 ) -> dict:
     """Rewrite the store (a) WITHOUT bands of `drop_docs` — documents
     since deduped away or retired from the kept corpus, whose bands
-    otherwise feed every future batch useless candidates — and (b) with
-    per-append small files coalesced to `files_per_partition`.
+    otherwise feed every future batch useless candidates — and (b) as
+    ONE flat parquet file in place of the per-append files. A store
+    written in the older (band_idx, band_bucket)-partitioned layout is
+    rewritten flat too, and its stamp loses the bucket count.
 
     Staged rewrite: the new store is fully written to `<path>.compact`
     BEFORE the old directory is swapped out, so a crash before the swap
@@ -759,7 +751,6 @@ def band_store_compact(
     Single compactor per store assumed, like `vacuum_table`.
     Returns before/after row and file counts so callers can alert on
     runaway growth."""
-    import glob
     import json
     import os
     import shutil
@@ -770,20 +761,16 @@ def band_store_compact(
     reader = spark.read
     if "schema" in meta:
         reader = reader.schema(meta["schema"])
-    cur = reader.parquet(store_path)
-    # legacy (pre-r9) stores lack the schema stamp: adopt the inferred
-    # one so the compacted store — possibly zero-row — reads cleanly
-    meta.setdefault(
-        "schema",
-        ", ".join(
-            f"{f.name} {f.dataType.simpleString()}"
-            for f in cur.schema.fields
-        ),
+    cur = reader.parquet(store_path).select("doc", "band_idx", "band_hash")
+    # stamp the flat schema (legacy stores: no stamp, or one that
+    # carries the band_bucket partition column) so the compacted store
+    # — possibly zero-row — reads cleanly
+    meta.pop("buckets", None)
+    meta["schema"] = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in cur.schema.fields
     )
-    reader = spark.read.schema(meta["schema"])
     n_before = cur.count()
-    f_before = len(glob.glob(os.path.join(store_path, "**", "*.parquet"),
-                             recursive=True))
+    f_before = len(_band_store_files(store_path))
     keep = cur
     if drop_docs is not None:
         keep = cur.join(
@@ -793,17 +780,11 @@ def band_store_compact(
         )
     if os.path.exists(staged):
         shutil.rmtree(staged)
-    (
-        keep.repartition(files_per_partition, "band_idx", "band_bucket")
-        .write.mode("overwrite")
-        .partitionBy("band_idx", "band_bucket")
-        .parquet(staged)
-    )
+    keep.coalesce(1).write.mode("overwrite").parquet(staged)
     with open(_band_store_params_path(staged), "w") as f:
         json.dump(meta, f)
-    n_after = reader.parquet(staged).count()
-    f_after = len(glob.glob(os.path.join(staged, "**", "*.parquet"),
-                            recursive=True))
+    n_after = spark.read.schema(meta["schema"]).parquet(staged).count()
+    f_after = len(_band_store_files(staged))
     if os.path.exists(old):
         shutil.rmtree(old)
     os.rename(store_path, old)
@@ -827,13 +808,12 @@ def incremental_dedup_against_store(
     num_hashes: int = 16,
     bands: int = 4,
     shingle_k: int = 3,
-    buckets: int = 64,
     append_survivors: bool = True,
 ) -> DataFrame:
     """One ingest-batch cycle against the persisted band store: compute
-    the NEW batch's bands once, prune-read the store to the touched
-    buckets, flag near-duplicates (`incremental_dedup` semantics), then
-    append the survivors' bands — the complete continuous-crawl step,
+    the NEW batch's bands once, semi-join the store to the rows those
+    bands can hit, flag near-duplicates (`incremental_dedup`
+    semantics), then append the survivors' bands — the complete continuous-crawl step,
     so the append-excludes-flagged rule lives here instead of in every
     caller. Returns the flagged (id_col, dup_of, jaccard) DataFrame
     (materialized: the append already consumed it)."""
@@ -897,7 +877,6 @@ def incremental_dedup_against_store(
             new_bands,
             store_path,
             flagged=flagged.select(id_col),
-            buckets=buckets,
             params=params,
         )
     return flagged

@@ -16,6 +16,7 @@ Engine differences (SURVEY.md §3.1 Spark design):
 
 from __future__ import annotations
 
+import logging
 import os
 import time
 from dataclasses import dataclass
@@ -24,6 +25,8 @@ from typing import Callable, Protocol
 from pyspark.sql import DataFrame, SparkSession
 
 from social_media_data_pipeline_spark import io as eio
+
+log = logging.getLogger(__name__)
 
 
 class Stage(Protocol):
@@ -69,6 +72,7 @@ class StageResult:
     result: str  # Success | Fail | Skipped | Disabled | MissingInput
     output: str | None
     execution_time: float | None
+    error: str | None = None  # "ExceptionType: message" of a Fail
 
 
 class PipelineRunner:
@@ -111,7 +115,9 @@ class PipelineRunner:
                 results.append(StageResult(name, impl, False, "Disabled", out, None))
                 continue
             if impl not in self.registry:
-                results.append(StageResult(name, impl, True, "Fail", out, None))
+                results.append(StageResult(
+                    name, impl, True, "Fail", out, None,
+                    f"unregistered implementation {impl!r}"))
                 continue
             # input-existence gate (`orchestrator.py:39`)
             if input_path is not None and not eio.stage_output_exists(self.spark, input_path):
@@ -124,18 +130,19 @@ class PipelineRunner:
 
             stage = self.registry[impl](spec.get("params", {}))
             tic = time.perf_counter()
+            error = None
             try:
                 df = stage.run(self.spark, input_path, output_path)
                 eio.write_stage_output(
                     df, output_path, partition_cols=tuple(spec.get("partition_by", ()))
                 )
-                ok = True
-            except Exception:
-                ok = False
+            except Exception as e:
+                error = f"{type(e).__name__}: {e}"
+                log.exception("stage %s (%s) failed", name, impl)
             toc = time.perf_counter()
-            results.append(
-                StageResult(name, impl, True, "Success" if ok else "Fail", out, toc - tic)
-            )
+            results.append(StageResult(
+                name, impl, True, "Fail" if error else "Success", out, toc - tic, error
+            ))
         return results
 
 
@@ -147,4 +154,6 @@ def summarize(results: list[StageResult]) -> str:
         t = f"{r.execution_time:.2f}s" if r.execution_time is not None else "-"
         pct = f"{(r.execution_time or 0) / total:.1%}" if r.execution_time is not None else "-"
         lines.append(f"{r.name:30.30} {r.implementation:28.28} {r.result:12} {t:>8} {pct:>8}")
+        if r.error:
+            lines.append(f"    {r.error}")
     return "\n".join(lines)

@@ -12,7 +12,7 @@ nine imperative scripts):
       ▼
     quality survivors
       │  incremental_dedup_against_store(...)      — batch bands only;
-      │    store read pruned to probe buckets;     history NEVER
+      │    store semi-joined to the batch bands;   history NEVER
       │    survivors' bands appended               recomputes
       ▼
     unique survivors
@@ -22,7 +22,8 @@ nine imperative scripts):
 
 Per-batch cost is bounded by the BATCH, not the corpus: quality is a
 scan of the batch; dedup computes signatures for the batch only and
-reads a probe-bucket-pruned slice of the band store; the upsert
+keeps only the band-store rows its bands can join (a broadcast
+left-semi join); the upsert
 rewrites only files whose key range overlaps the batch. An empty
 micro-batch (routine in production streams) is a no-op at every stage
 — pinned by test, the exact r8 regression (a zero-row append used to

@@ -499,6 +499,61 @@ class TestBandStoreLifecycle:
         assert j_pruned == j_full
         assert pruned.count() < full.count()  # and it actually pruned
 
+    def test_append_writes_flat_files(self, spark, tmp_path):
+        """Each append adds at most one parquet file per input partition
+        directly under the store directory: no partition directories."""
+        import os
+
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        params = {"num_hashes": 16, "bands": 4, "shingle_k": 3}
+
+        def parquet_files():
+            return sorted(
+                os.path.relpath(os.path.join(d, f), store)
+                for d, _, fs in os.walk(store) for f in fs if f.endswith(".parquet")
+            )
+
+        seen = []
+        for lo in (0, 40):
+            docs = self._docs(
+                spark, [(i, f"document number {i} with body {i * 7}") for i in range(lo, lo + 40)]
+            )
+            bands = sketches.minhash_band_table(docs, "doc_id", "text").repartition(3)
+            ddp.band_store_append(bands, store, params=params)
+            files = parquet_files()
+            assert len(files) - len(seen) <= 3
+            seen = files
+        assert all(os.sep not in f for f in seen)
+        assert not [d for d in os.listdir(store) if d.startswith(("band_idx=", "band_bucket="))]
+        assert ddp.band_store_read(spark, store).count() == 80 * 4
+
+    def test_compact_rewrites_bucketed_store_flat(self, spark, tmp_path):
+        """A store in the older (band_idx, band_bucket)-partitioned
+        layout compacts to one flat file and then takes appends."""
+        import json
+        import os
+
+        from social_media_data_pipeline_spark.functions import sketches
+        from social_media_data_pipeline_spark.operators import dedup as ddp
+
+        store = str(tmp_path / "bands")
+        params = {"num_hashes": 16, "bands": 4, "shingle_k": 3}
+        bands = sketches.minhash_band_table(self._docs(spark, [(1, self.BASE)]), "doc_id", "text")
+        legacy = bands.withColumn("band_bucket", F.pmod(F.crc32("band_hash"), F.lit(64)))
+        legacy.write.partitionBy("band_idx", "band_bucket").parquet(store)
+        schema = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in legacy.schema.fields)
+        with open(os.path.join(store, "_band_store_meta.json"), "w") as f:
+            json.dump({"buckets": 64, **params, "schema": schema}, f)
+        stats = ddp.band_store_compact(spark, store)
+        assert (stats["rows_before"], stats["rows_after"], stats["files_after"]) == (4, 4, 1)
+        fresh = self._docs(spark, [(2, "fresh unseen body")])
+        ddp.band_store_append(sketches.minhash_band_table(fresh, "doc_id", "text"), store,
+                              params=params)
+        assert {r["doc"] for r in ddp.band_store_read(spark, store).collect()} == {1, 2}
+
     def test_param_stamp_refuses_mixed_signatures(self, spark, tmp_path):
         import pytest
 
@@ -577,7 +632,7 @@ class TestBandStoreLifecycle:
 
     def test_data_without_meta_stamp_refused(self, spark, tmp_path):
         """Parquet data with no meta stamp must be refused, not read
-        with silently-assumed default params (wrong bucket pruning)."""
+        with silently-assumed default params (bands that never match)."""
         from social_media_data_pipeline_spark.operators import dedup as ddp
         from social_media_data_pipeline_spark.functions import sketches
         import pytest

@@ -180,3 +180,26 @@ class TestPipeline:
             if r.name in ("Feed Scrape", "Preprocessing", "Translation", "Exploratory Analysis")
         )
         assert "Skipped" in summarize(results2)
+
+    def test_stage_failure_carries_its_cause(self, spark, tmp_path, caplog):
+        from social_media_data_pipeline_spark.plans.pipeline import SourceStage
+
+        def broken(spark, params):
+            raise ValueError("feed page 3 has no 'items' key")
+
+        registry = {"Broken": lambda params: SourceStage(broken, params)}
+        config = {
+            "dataset_name": "ds",
+            "stages": [
+                {"name": "Scrape", "implementation": "Broken", "output": "raw"},
+                {"name": "Typo", "implementation": "Nope", "output": "x"},
+            ],
+        }
+        with caplog.at_level("ERROR"):
+            results = PipelineRunner(spark, registry).run(config, str(tmp_path))
+        assert [r.result for r in results] == ["Fail", "Fail"]
+        assert results[0].error == "ValueError: feed page 3 has no 'items' key"
+        report = summarize(results)
+        assert "ValueError: feed page 3 has no 'items' key" in report
+        assert "unregistered implementation 'Nope'" in report
+        assert any(r.exc_info for r in caplog.records)  # traceback logged

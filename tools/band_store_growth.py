@@ -2,16 +2,18 @@
 
 Splits the sf documents table into 8 ingest batches (doc_id mod 8,
 arriving in order), runs the full continuous-crawl cycle per batch
-(`dedup.incremental_dedup_against_store`: pruned store read → flag →
-survivors-only append), and measures what the long-lived asset does:
-store rows, parquet file count, flagged duplicates, and per-batch wall
-time. Then compacts (coalescing the 8 appends' small files) and
-re-times a probe batch against the compacted store.
+(`dedup.incremental_dedup_against_store`: store read semi-joined to
+the batch's bands → flag → survivors-only append), and measures what
+the long-lived asset does: store rows, parquet file count, flagged
+duplicates, and per-batch wall time. Then compacts (coalescing the 8
+appends' files into one) and re-times a probe batch against the
+compacted store.
 
 The numbers to read: (a) per-batch wall time should stay ~flat as the
 store grows 8× — the batch side of the join is constant and the store
-read is bucket-pruned; (b) file count grows linearly with appends
-(the small-file problem) and compaction collapses it; (c) flagged
+is flat parquet, scanned once and semi-joined to the broadcast batch
+bands; (b) file count grows linearly with appends (at most one file
+per batch partition) and compaction collapses it to one; (c) flagged
 counts reflect real cross-batch duplicates in the synthetic corpus.
 
 Usage: python tools/band_store_growth.py   (sf dir from

@@ -34,33 +34,48 @@ sys.path.insert(0, REPO)
 
 BASELINE = os.path.join(REPO, "SHUFFLES.json")
 SF_DIR = os.environ.get("SPARK_GRAFT_CHECK_SF_DIR", "/root/testdata/sf0.01")
+# a line's tree prefix: spaces and `:` continuations, stopping before a
+# `:-` / `+-` branch marker or the operator name
+_TREE_PREFIX = re.compile(r"(?:[ :](?!-))*")
 
 
 def exchange_count(df) -> int:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    plan = buf.getvalue().split("===== Subqueries =====")[0]
-    # Count DISTINCT Exchange operator ids from the plan TREE (r13):
-    # a persist-pinned table (io.pin_stats) displays its cached child
-    # plan under EVERY InMemoryTableScan that reads it, including the
-    # nested AdaptiveSparkPlan's "== Initial Plan ==" duplicate — the
-    # old detail-section line count charged those exchanges once per
-    # display even though the cached plan executes exactly once at pin
-    # time. Dedupe by operator id and skip Initial Plan regions (the
-    # Final Plan is what ran). BroadcastExchange/ReusedExchange are not
-    # shuffles and stay excluded.
+    return plan_exchange_count(buf.getvalue())
+
+
+def plan_exchange_count(formatted_plan: str) -> int:
+    """Shuffle Exchanges in the tree of a `explain("formatted")` text.
+
+    Counts DISTINCT Exchange operator ids from the plan TREE (r13):
+    a persist-pinned table (io.pin_stats) displays its cached child
+    plan under EVERY InMemoryTableScan that reads it, including the
+    nested AdaptiveSparkPlan's "== Initial Plan ==" duplicate — the
+    old detail-section line count charged those exchanges once per
+    display even though the cached plan executes exactly once at pin
+    time. Dedupe by operator id and skip Initial Plan regions (the
+    Final Plan is what ran). BroadcastExchange/ReusedExchange are not
+    shuffles and stay excluded.
+
+    A region ends at the first line whose tree prefix is no longer than
+    the marker's: the marker line and the body lines are measured the
+    same way, so a sibling drawn at the marker's own `+- ` depth ends
+    the region instead of being skipped.
+    """
+    plan = formatted_plan.split("===== Subqueries =====")[0]
     ids: set[str] = set()
     skip_col: int | None = None
     for line in plan.splitlines():
-        content = len(line) - len(line.lstrip(" :+-*"))
+        indent = _TREE_PREFIX.match(line).end()
         if skip_col is not None:
-            if content <= skip_col and line.strip():
+            if indent <= skip_col and line.strip():
                 skip_col = None
             else:
                 continue
         if "== Initial Plan ==" in line:
-            skip_col = len(line) - len(line.lstrip(" :"))
+            skip_col = indent
             continue
         for m in re.finditer(r"\b(?<!Broadcast)(?<!Reused)Exchange \((\d+)\)", line):
             ids.add(m.group(1))
